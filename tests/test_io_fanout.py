@@ -20,15 +20,17 @@ import pytest
 from trafficanalysisbigdata_spark.io import fan_out_small_scan, load_table
 
 _MPB = "spark.sql.files.maxPartitionBytes"
+_TINY_SPLITS = ("1", "1b")
 
 
 @pytest.fixture()
 def _tiny_split(spark):
-    """Shrink the session's scan-split conf so every frame estimates 'big
-    enough' — the gate must read the CONF (r14 advice), not a constant."""
+    """Yields a setter that shrinks the session's scan-split conf so every
+    frame estimates 'big enough' — the gate must read the CONF (r14 advice),
+    not a constant — and restores the conf afterwards. "1b" is a valid
+    Spark byte string for one byte, so the gate must read it as 1 too."""
     orig = spark.conf.get(_MPB)
-    spark.conf.set(_MPB, "1")
-    yield
+    yield lambda value: spark.conf.set(_MPB, value)
     spark.conf.set(_MPB, orig)
 
 
@@ -41,10 +43,14 @@ def test_small_scan_fans_out_to_parallelism(spark, sf_dir):
 
 def test_gate_off_past_size_bound(spark, sf_dir, _tiny_split):
     # with maxPartitionBytes=1 every frame sits past one "split": the gate
-    # must come back untouched, proving the bound tracks the session conf
-    base = load_table(spark, sf_dir, "embeddings")
-    df = fan_out_small_scan(base, "vec_id")
-    assert df is base  # untouched — no repartition node added
+    # must come back untouched, proving the bound tracks the session conf.
+    # One partition, so the partitions-vs-cores gate cannot mask the size
+    # gate (a 1-byte split alone scans as thousands of partitions)
+    base = load_table(spark, sf_dir, "embeddings").coalesce(1)
+    for value in _TINY_SPLITS:
+        _tiny_split(value)
+        df = fan_out_small_scan(base, "vec_id")
+        assert df is base, value  # untouched — no repartition node added
 
 
 def test_gate_off_when_partitions_cover_cores(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""Lenient type coercion (SURVEY.md §2.8, F10–F12).
+"""Lenient type coercion (SURVEY.md §2.8, F10–F11).
 
 The reference trusts no ingested types: every numeric column passes through
 ``pd.to_numeric(errors='coerce')`` (TrafficAnalysis.py:104-107) and dates
@@ -9,7 +9,7 @@ safe under ANSI mode (a plain ``cast`` would raise).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -21,13 +21,3 @@ def to_number(c: Column, dtype: str = "double") -> Column:
 def to_timestamp_lenient(c: Column) -> Column:
     """F11: lenient timestamp parse — NULL for malformed values."""
     return F.try_to_timestamp(c)
-
-
-def fill_zero(c: Column) -> Column:
-    """F12 (ref Dash.py:53): fillna(0) for a measure."""
-    return F.coalesce(c, F.lit(0))
-
-
-def coerce_numeric(df: DataFrame, cols: dict[str, str]) -> DataFrame:
-    """Bulk lenient coercion: {column: dtype} (ref TrafficAnalysis.py:104-107)."""
-    return df.withColumns({name: to_number(F.col(name), t) for name, t in cols.items()})

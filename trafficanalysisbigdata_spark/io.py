@@ -39,33 +39,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# One parquet scan split (default 128 MB when the conf is unreadable). A
-# frame estimated under this collapsed to one scan task (single file, single
-# row group in the fixtures), so everything fused above the scan runs on one
-# core no matter how many the session has — the guide's "input skew: one
-# huge unsplittable file; repartition immediately after the read" case
-# (§2.5), in miniature. The bound also caps the fan-out shuffle's bytes.
-_FANOUT_MAX_BYTES_DEFAULT = 128 * 1024 * 1024
-
-
-def _fanout_max_bytes(spark: SparkSession) -> int:
-    """One scan split as the SESSION sizes it: read
-    ``spark.sql.files.maxPartitionBytes`` so a deployment that re-tunes its
-    split size keeps the fan-out gate aligned with actual scan splits
-    (r14 advice); fall back to Spark's 128 MB default."""
-    try:
-        raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        if raw.isdigit():
-            return int(raw)
-        units = {"k": 1024, "m": 1024**2, "g": 1024**3}
-        low = raw.lower().removesuffix("b")
-        if low and low[-1] in units and low[:-1].isdigit():
-            return int(low[:-1]) * units[low[-1]]
-    except Exception:  # unreadable conf — use Spark's documented default
-        pass
-    return _FANOUT_MAX_BYTES_DEFAULT
-
-
 def fan_out_small_scan(df: DataFrame, key_col: str) -> DataFrame:
     """Scale-adaptive fan-out for EXPRESSION-HEAVY pipelines over a small
     scan: when the frame has fewer partitions than the session has cores AND
@@ -94,9 +67,11 @@ def fan_out_small_scan(df: DataFrame, key_col: str) -> DataFrame:
         # size gate FIRST: it reads optimized-plan statistics (no physical
         # planning), and every at-scale layout exceeds one split, so the
         # df.rdd physical-plan compile below is only ever paid by frames
-        # already known to be small (r14 verdict item on double planning)
+        # already known to be small (r14 verdict item on double planning).
+        # One split is spark.sql.files.maxPartitionBytes as Spark parses it.
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        if est >= _fanout_max_bytes(spark):
+        split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        if est >= split:
             return df
         if df.rdd.getNumPartitions() >= cores:
             return df

@@ -103,12 +103,6 @@ def histogram(df: DataFrame, measure: str, bins: int = 20) -> DataFrame:
     return binned.groupBy("bin").agg(F.count(F.lit(1)).alias("n")).orderBy("bin")
 
 
-def wide_groupby_sum(df: DataFrame, key: str, measures: list[str]) -> DataFrame:
-    """A8 (ref proto/TrafficAnalysis_Hist.py:203): sum many measure columns in
-    one grouped pass."""
-    return df.groupBy(key).agg(*[sum_exact(m, f"sum_{m}") for m in measures])
-
-
 def pivot_totals(
     df: DataFrame, key: Column | str, pivot_col: str, pivot_vals: list[str], measure: str, key_alias: str
 ) -> DataFrame:

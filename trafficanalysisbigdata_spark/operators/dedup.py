@@ -204,11 +204,6 @@ def jaccard_scores(
     )
 
 
-def jaccard_verify(pairs: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
-    """Candidate pairs whose exact set Jaccard clears ``threshold``."""
-    return jaccard_scores(pairs, sets).filter(F.col("jaccard") >= threshold)
-
-
 def df_capped(
     postings: DataFrame,
     docs_total: DataFrame,

@@ -1,4 +1,4 @@
-"""Filter / flag operators (SURVEY.md §2.2, P4–P9).
+"""Filter / flag operators (SURVEY.md §2.2, P4, P6–P9).
 
 The stat-threshold flags (P8/P9) follow the survey's prescribed shape: compute
 the scalar statistics in one aggregation, then broadcast the single stats row
@@ -15,11 +15,6 @@ from pyspark.sql import functions as F
 def drop_null_rows(df: DataFrame, cols: list[str]) -> DataFrame:
     """P4 (ref TrafficAnalysis.py:76-77): dropna(subset=...)."""
     return df.na.drop(subset=cols)
-
-
-def drop_mostly_null_rows(df: DataFrame, thresh: int) -> DataFrame:
-    """P5 (ref proto/TrafficAnalysis_Hist.py:84): keep rows with ≥thresh non-nulls."""
-    return df.na.drop(thresh=thresh)
 
 
 def equality_filter(df: DataFrame, col: str, value) -> DataFrame:

@@ -5,20 +5,15 @@ inside the as-of join's union+window core, operators/asof.py:70); the engine
 ships Spark's full relational set algebra because cohort-style questions
 ("users who did A and B", "did A but never B") are set expressions.
 
-Scale shapes: ``union`` is a zero-shuffle bag concat; ``intersect`` /
-``except_distinct`` compile to semi/anti joins after per-side distincts —
-shuffles are on the (pruned) key projection only, so they cost what a
-distinct costs, never a full-row comparison.
+Scale shapes: ``union_distinct`` is a bag concat plus one distinct;
+``intersect_distinct`` / ``except_distinct`` compile to semi/anti joins
+after per-side distincts — shuffles are on the (pruned) key projection
+only, so they cost what a distinct costs, never a full-row comparison.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Bag union by column NAME (order-robust, like pandas concat)."""
-    return a.unionByName(b)
 
 
 def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:

@@ -38,7 +38,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -723,7 +723,9 @@ def ivf_topk(
     k-means, amortized over the query batch; ``build_ivf_index`` +
     ``ivf_topk_indexed`` persist the fit so query time pays none of it."""
     assigned, centers = _ivf_fit(corpus, n_clusters, id_col, vec_col, seed)
-    return _ivf_query(assigned, centers, probes, k, n_probe, id_col, vec_col)
+    return _ivf_query(
+        assigned, centers, probes, k, n_probe, id_col, vec_col, _sq_dist_key()
+    )
 
 
 def _ivf_fit(
@@ -790,7 +792,24 @@ def ivf_topk_indexed(
     the probed ``cl=`` partitions (dynamic partition pruning)."""
     assigned = spark.read.parquet(f"{index_dir}/assignments")
     centers = spark.read.parquet(f"{index_dir}/centroids")
-    return _ivf_query(assigned, centers, probes, k, n_probe, id_col, vec_col)
+    return _ivf_query(
+        assigned, centers, probes, k, n_probe, id_col, vec_col, _sq_dist_key()
+    )
+
+
+def _sq_dist_key() -> Column:
+    """k-means shortlist key: squared L2 from the probe to the centroid,
+    rounded to 6."""
+    sq_dist = F.aggregate(
+        F.zip_with(
+            F.transform("query_vec", lambda x: x.cast("double")),
+            F.col("center"),
+            lambda a, b: (a - b) * (a - b),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return F.round(sq_dist, 6)
 
 
 def _ivf_query(
@@ -801,34 +820,28 @@ def _ivf_query(
     n_probe: int,
     id_col: str,
     vec_col: str,
+    shortlist_key: Column,
 ) -> DataFrame:
     """Shared IVF query path: broadcast centroid shortlist → cluster-id
     equi-join → prenorm cosine → per-probe top-k.
 
-    The shortlist ranks on the squared distance ROUNDED TO 6 (cl as the
-    tie-break), matching the repo's round-6 idiom everywhere a float feeds
-    an ordering decision: last-ulp fold differences between engines (or
-    between Spark codegen variants) can otherwise flip near-tied cell
-    picks, and the rounding is what makes the query stage over a persisted
-    index value-oracle-checkable (sim6x) rather than rows-only."""
+    Each probe keeps the ``n_probe`` centroids with the smallest
+    ``shortlist_key`` (an expression over ``query_vec`` and ``center``; cl
+    is the tie-break, nulls last). Keys are ROUNDED TO 6, matching the
+    repo's round-6 idiom everywhere a float feeds an ordering decision:
+    last-ulp fold differences between engines (or between Spark codegen
+    variants) can otherwise flip near-tied cell picks, and the rounding is
+    what makes the query stage over a persisted index value-oracle-checkable
+    (sim6x, sim8) rather than rows-only."""
     p = probes.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("query_vec"),
         norm(as_double(F.col(vec_col))).alias("qn"),
     )
-    sq_dist = F.aggregate(
-        F.zip_with(
-            F.transform("query_vec", lambda x: x.cast("double")),
-            F.col("center"),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wshort = Window.partitionBy("query_id").orderBy("d", "cl")
+    wshort = Window.partitionBy("query_id").orderBy(F.col("d").asc_nulls_last(), "cl")
     shortlist = (
         p.crossJoin(F.broadcast(centers))
-        .withColumn("d", F.round(sq_dist, 6))
+        .withColumn("d", shortlist_key)
         .withColumn("rn", F.row_number().over(wshort))
         .filter(F.col("rn") <= n_probe)
         .select("query_id", "query_vec", "qn", "cl")
@@ -1576,42 +1589,14 @@ def hash_ivf_topk_indexed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Query the deterministic IVF index: probes shortlist their ``n_probe``
-    nearest centroids by ROUNDED COSINE (desc, cl tie-break — unlike
-    ``_ivf_query``'s squared-distance shortlist, the rounded cosine is
-    engine-exact, which is what lets the oracle reproduce the shortlist),
-    then exact re-rank within probed cells only (dynamic partition pruning
-    on the ``cl=`` layout)."""
+    """Query the deterministic IVF index through ``_ivf_query``: probes
+    shortlist their ``n_probe`` nearest centroids by ROUNDED COSINE (desc,
+    cl tie-break — unlike the k-means squared-distance shortlist, the
+    rounded cosine is engine-exact, which is what lets the oracle reproduce
+    the shortlist), then exact re-rank within probed cells only (dynamic
+    partition pruning on the ``cl=`` layout)."""
     assigned = spark.read.parquet(f"{index_dir}/assignments")
     centers = spark.read.parquet(f"{index_dir}/centroids")
-    p = probes.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        norm(as_double(F.col(vec_col))).alias("qn"),
-    )
-    wshort = Window.partitionBy("query_id").orderBy(F.desc("c"), F.asc("cl"))
-    shortlist = (
-        p.crossJoin(F.broadcast(centers))
-        .withColumn("c", F.round(cosine(F.col("query_vec"), F.col("center")), 6))
-        .withColumn("rn", F.row_number().over(wshort))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "query_vec", "qn", "cl")
-    )
-    scored = (
-        shortlist.join(assigned, "cl")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_prenorm(F.col("query_vec"), F.col("vec"), F.col("qn"), F.col("cn")),
-                6,
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    # negation is exact, so ascending on it is desc(cos), asc(cl)
+    key = -F.round(cosine(F.col("query_vec"), F.col("center")), 6)
+    return _ivf_query(assigned, centers, probes, k, n_probe, id_col, vec_col, key)
