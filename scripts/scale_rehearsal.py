@@ -558,9 +558,11 @@ def run_family(spark, doc_path: str, emb_path: str, n_docs: int, big: bool) -> d
         ).agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("jaccard"), 2).alias("s"))
 
     def dd4():
-        return dd.ngram_jaccard_scores(docs, max_df_frac=0.05, max_df_abs=256).filter(
-            F.col("jaccard") >= 0.25
-        ).agg(F.count(F.lit(1)).alias("n"))
+        return (
+            dd.ngram_jaccard_scores(docs)
+            .filter(F.col("jaccard") >= 0.25)
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
 
     ops = {
         "dd1_exact": lambda: dd.exact_dedup_summary(docs),

@@ -226,7 +226,7 @@ def test_cdc_chunks_resync_property(spark):
         "doc_id long, text string",
     )
     out = {}
-    for r in cdc_chunks(docs, modulus=16).collect():
+    for r in cdc_chunks(docs).collect():
         out.setdefault(r.doc_id, []).append((r.chunk, r.n_tokens, r.fp))
     for v in out.values():
         v.sort()
@@ -302,7 +302,7 @@ def test_cdc_stats_match_independent_reference(spark):
     )
     got = [
         (r.chunk_len, r.n_chunks, r.n_distinct, r.n_dup_instances, r.saved_tokens)
-        for r in cdc_chunk_dedup_stats(docs, modulus=16).collect()
+        for r in cdc_chunk_dedup_stats(docs).collect()
     ]
     assert got == expect
     assert any(d > 0 for _, _, _, d, _ in expect), "planted dup must register"
@@ -339,7 +339,7 @@ def test_cdc_guarded_matches_reference_and_respects_guards(spark):
 
     got = sorted(
         (r.doc_id, r.chunk, r.n_tokens, r.fp)
-        for r in cdc_chunks_guarded(docs, MOD, MN, MX).collect()
+        for r in cdc_chunks_guarded(docs).collect()
     )
 
     expect = []

@@ -168,7 +168,7 @@ def test_wide_cast_and_melt(spark):
     assert rows["78"]["date"] is None  # F11: lenient date
     assert rows["78"]["_3_00_4_00am"] is None  # F10: lenient int
 
-    long = melt_wide(typed, ["segmentid"])
+    long = melt_wide(typed)
     assert long.count() == 2 * 24
     # F13 parity: label '_12_00_1_00_am' → 12, '_1_00_2_00am' → 1 (the
     # reference's regex keeps the 12-hour clock number)

@@ -130,7 +130,7 @@ def test_sample_frames_ragged_tail(spark):
     )
     rows = sorted(
         (r.media_id, r.frame_idx, len(bytes(r.frame)))
-        for r in sample_frames(media, frame_bytes=32).collect()
+        for r in sample_frames(media).collect()
     )
     # image row filtered out; empty video emits no frames
     assert rows == [(1, 0, 32), (1, 1, 32), (1, 2, 3)]
@@ -141,16 +141,14 @@ def test_audio_window_energy_math(spark):
     from trafficanalysisbigdata_spark.operators.multimodal import audio_window_energy
 
     # 30 'z' bytes (ord 122): window 0 = 25 full bytes -> 3050 (not silent at
-    # threshold 3000), window 1 = 5-byte tail -> 610 (silent); image filtered
+    # threshold 2400), window 1 = 5-byte tail -> 610 (silent); image filtered
     media = spark.createDataFrame(
         [(1, "audio", b"z" * 30), (2, "image", b"z" * 30)],
         "media_id long, modality string, content binary",
     )
     rows = sorted(
         (r.media_id, r.win, r.energy, r.is_silent)
-        for r in audio_window_energy(
-            media, window_bytes=25, silence_threshold=3000
-        ).collect()
+        for r in audio_window_energy(media).collect()
     )
     assert rows == [(1, 0, 25 * 122, 0), (1, 1, 5 * 122, 1)]
 

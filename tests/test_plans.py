@@ -16,13 +16,9 @@ import re
 
 import pytest
 
-from trafficanalysisbigdata_spark.io import register_views
+from trafficanalysisbigdata_spark.io import TABLES, register_views
 from trafficanalysisbigdata_spark.plans.registry import queries
 from trafficanalysisbigdata_spark.session import prep
-
-ALL_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -31,7 +27,7 @@ def _views(spark, sf_dir):
     # cached relations from other modules would replace scans with
     # InMemoryRelation and void every shape assertion below
     spark.catalog.clearCache()
-    register_views(spark, sf_dir, *ALL_TABLES)
+    register_views(spark, sf_dir, *TABLES)
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -618,7 +614,7 @@ def test_tx19_fusion_inputs_are_rank_bounded(spark, sf_dir):
 
 
 def test_tx17b_no_unpartitioned_window(spark, sf_dir):
-    """tx17b's scale claim (the tx17 decimation dial): the running sums and
+    """tx17b's scale claim (tx17's decimated form): the running sums and
     the offset ledger must ride PARTITIONED windows only — the local
     cumsums by (source, range-bucket), the ledger by source — so no task
     ever sorts more than one source-bucket or one source's n_buckets

@@ -110,7 +110,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
 
         stream = spark.readStream.schema(EVENTS_DDL).parquet(src)
         q = (
-            watermarked_tumbling_hourly(stream, late="1 hour")
+            watermarked_tumbling_hourly(stream)
             .select(
                 F.col("window.start").cast("string").alias("window_start"),
                 "total",

@@ -9,7 +9,8 @@ def test_heaps_beta_separates_saturating_from_growing_vocab(spark):
     recycles the same 10 tokens saturates (beta near 0), a source whose
     every doc introduces new vocabulary keeps growing (beta near 1), and
     the first-seen decomposition's totals must equal the true per-source
-    distinct-token counts."""
+    distinct-token counts. Setting the retired decimation conf key changes
+    no row."""
     from trafficanalysisbigdata_spark.plans.registry import load_all
 
     rows = []
@@ -21,13 +22,21 @@ def test_heaps_beta_separates_saturating_from_growing_vocab(spark):
         rows.append((d, "growing", " ".join(f"g{d:02d}x{i:02d}" for i in range(20))))
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
     docs.createOrReplaceTempView("documents")
+    tx17 = load_all()["tx17_heaps_vocab_growth"].fn
+    # the retired decimation conf must not change tx17: at 20 points per
+    # decade the old conf route dropped rank 11 of each 12-doc source
+    retired_conf = "spark.trafficanalysisbigdata.heaps.pointsPerDecade"
     try:
-        out = {
-            r.source: r
-            for r in load_all()["tx17_heaps_vocab_growth"].fn(spark, "").collect()
-        }
+        rows_unset = sorted(tx17(spark, "").collect())
+        spark.conf.set(retired_conf, "20")
+        try:
+            rows_set = sorted(tx17(spark, "").collect())
+        finally:
+            spark.conf.unset(retired_conf)
     finally:
         spark.catalog.dropTempView("documents")
+    assert rows_set == rows_unset
+    out = {r.source: r for r in rows_unset}
     assert out["saturated"].n_vocab == 10
     assert out["growing"].n_vocab == 12 * 20
     assert out["saturated"].heaps_beta < 0.1

@@ -139,24 +139,22 @@ class TrafficAnalytics:
         """
         from .streaming.snapshot import dashboard_queries
 
-        snap = self.df.select(
-            F.col("request_id").alias("event_id"),
-            F.col("segment_id").alias("user_id"),
-            F.col("borough").alias("event_type"),
-            F.col("volume").cast("double").alias("value"),
-            F.col("datetime").alias("ts"),
-        )
-        return dashboard_queries(snap)
+        return dashboard_queries(self._as_events())
 
     def volume_model(self) -> dict:
         """M1: the reference's RF volume regression, metrics dict."""
         from .ml.models import rf_regression
 
-        events = self.df.select(
+        return rf_regression(self._as_events())
+
+    def _as_events(self) -> DataFrame:
+        """The traffic frame in the engine's events schema (event_id,
+        user_id, event_type, value, ts) that the dashboard and model
+        operators read."""
+        return self.df.select(
             F.col("request_id").alias("event_id"),
             F.col("segment_id").alias("user_id"),
             F.col("borough").alias("event_type"),
             F.col("volume").cast("double").alias("value"),
             F.col("datetime").alias("ts"),
         )
-        return rf_regression(events)

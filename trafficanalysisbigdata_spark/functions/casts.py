@@ -13,9 +13,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def to_number(c: Column, dtype: str = "double") -> Column:
-    """F10: lenient numeric cast — NULL for malformed values."""
-    return c.try_cast(dtype)
+def to_number(c: Column) -> Column:
+    """F10: lenient integer cast — NULL for malformed values. Every ingested
+    numeric column of the reference's schemas (counts, ids, date parts) is
+    an integer."""
+    return c.try_cast("int")
 
 
 def to_timestamp_lenient(c: Column) -> Column:

@@ -51,19 +51,11 @@ def _unpersist_rdds(sc, ids: set[int]) -> None:
         pass
 
 
-def symmetrized_edges(pairs: DataFrame, src: str = "doc1", dst: str = "doc2") -> DataFrame:
-    """Undirected edge list (v, w): each input pair in both directions."""
-    a = pairs.select(F.col(src).alias("v"), F.col(dst).alias("w"))
-    b = pairs.select(F.col(dst).alias("v"), F.col(src).alias("w"))
-    return a.unionByName(b).distinct()
-
-
-def connected_components(
-    pairs: DataFrame, src: str = "doc1", dst: str = "doc2", max_iter: int = 25
-) -> DataFrame:
-    """(v, component) for every vertex in ``pairs``; component = min vertex
-    id reachable from v. Converges in ≤ max_iter rounds (raises if not —
-    silent non-convergence would return wrong clusters).
+def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+    """(v, component) for every vertex of the (doc1, doc2) edges in
+    ``pairs``; component = min vertex id reachable from v. Converges in
+    ≤ max_iter rounds (raises if not — silent non-convergence would return
+    wrong clusters).
 
     Round cost (r15 optimization pass): TWO joins per round instead of
     three. The neighbor-label rows and each vertex's OWN checkpointed label
@@ -80,7 +72,7 @@ def connected_components(
     edge sets; equivalence vs union-find is property-tested in
     tests/test_properties.py).
 
-    The edge list skips ``symmetrized_edges``' dedup: every consumer of
+    The symmetrized edge list is not deduplicated: every consumer of
     ``edges`` here is a MIN aggregate, which is duplicate-insensitive, so
     the ``distinct()`` was a full exchange + aggregate of the edge list at
     setup buying nothing (and the usual pair producers emit strictly
@@ -94,8 +86,8 @@ def connected_components(
     sc = pairs.sparkSession.sparkContext
     pre = _persistent_rdd_ids(sc)
     edges = (
-        pairs.select(F.col(src).alias("v"), F.col(dst).alias("w"))
-        .unionByName(pairs.select(F.col(dst).alias("v"), F.col(src).alias("w")))
+        pairs.select(F.col("doc1").alias("v"), F.col("doc2").alias("w"))
+        .unionByName(pairs.select(F.col("doc2").alias("v"), F.col("doc1").alias("w")))
         .localCheckpoint(eager=True)
     )
     labels = (

@@ -26,9 +26,9 @@ from pyspark.sql import functions as F
 from ..functions.text import md5_fingerprint, token_bigrams, tokens
 
 
-def exact_dedup_summary(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup_summary(docs: DataFrame) -> DataFrame:
     """Exact dedup via groupBy(text): per-group keeper = min(doc_id)."""
-    groups = docs.groupBy(text_col).agg(
+    groups = docs.groupBy("text").agg(
         F.min("doc_id").alias("keeper"), F.count(F.lit(1)).alias("n_copies")
     )
     return groups.agg(
@@ -39,35 +39,32 @@ def exact_dedup_summary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def doc_token_sets(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_token_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, token) distinct pairs — the set representation used by both
     MinHash and Jaccard verification."""
     return docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("token")
+        "doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("token")
     )
 
 
-def _set_array(elems: Column, hashed: bool) -> Column:
-    """Distinct element array, optionally as xxhash64 ints: integer-array
-    intersection is ~2× faster than string-array intersection over millions
-    of candidate pairs, and a 64-bit collision inside one pair's ~100-element
-    union (P ≈ 1e-16) is the only way results could differ from the
-    string-set oracle."""
-    arr = F.array_distinct(elems)
-    return F.transform(arr, lambda t: F.xxhash64(t)) if hashed else arr
+def _set_array(elems: Column) -> Column:
+    """Distinct element array as xxhash64 ints: integer-array intersection
+    is ~2× faster than string-array intersection over millions of candidate
+    pairs, and a 64-bit collision inside one pair's ~100-element union
+    (P ≈ 1e-16) is the only way results could differ from the string-set
+    oracle."""
+    return F.transform(F.array_distinct(elems), lambda t: F.xxhash64(t))
 
 
-def doc_token_arrays(docs: DataFrame, text_col: str = "text", hashed: bool = True) -> DataFrame:
-    """(doc_id, toks) with toks = distinct tokens as an array — the row-local
-    set form consumed by ``jaccard_scores``."""
-    return docs.select("doc_id", _set_array(tokens(F.col(text_col)), hashed).alias("toks"))
+def doc_token_arrays(docs: DataFrame) -> DataFrame:
+    """(doc_id, toks) with toks = distinct hashed tokens as an array — the
+    row-local set form consumed by ``jaccard_scores``."""
+    return docs.select("doc_id", _set_array(tokens(F.col("text"))).alias("toks"))
 
 
-def doc_shingle_arrays(docs: DataFrame, text_col: str = "text", hashed: bool = True) -> DataFrame:
-    """(doc_id, toks) with toks = distinct token bigrams as an array."""
-    return docs.select(
-        "doc_id", _set_array(token_bigrams(F.col(text_col)), hashed).alias("toks")
-    )
+def doc_shingle_arrays(docs: DataFrame) -> DataFrame:
+    """(doc_id, toks) with toks = distinct hashed token bigrams as an array."""
+    return docs.select("doc_id", _set_array(token_bigrams(F.col("text"))).alias("toks"))
 
 
 def minhash_signatures(tok: DataFrame, num_perm: int = 8) -> DataFrame:
@@ -159,7 +156,7 @@ def jaccard_scores(
 ) -> DataFrame:
     """Exact set Jaccard for every candidate pair.
 
-    ``sets`` is the set-as-array form ``(doc_id, toks: array<string>)`` — the
+    ``sets`` is the set-as-array form ``(doc_id, toks: array<bigint>)`` — the
     pair verification is two id equi-joins plus a per-row ``array_intersect``,
     NOT a pairs×tokens explode join. With hot LSH buckets (boilerplate-heavy
     corpora) candidate volume is O(bucket²); keeping verification per-pair
@@ -204,14 +201,15 @@ def jaccard_scores(
     )
 
 
-def df_capped(
-    postings: DataFrame,
-    docs_total: DataFrame,
-    max_df_frac: float,
-    max_df_abs: int = 256,
-) -> DataFrame:
+# Document-frequency caps of ``df_capped``: a token is kept while its df is
+# at most min(DF_CAP_FRAC * n_docs, DF_CAP_ABS).
+DF_CAP_FRAC = 0.05
+DF_CAP_ABS = 256
+
+
+def df_capped(postings: DataFrame, docs_total: DataFrame) -> DataFrame:
     """Drop postings whose token's document frequency exceeds
-    ``min(max_df_frac * n_docs, max_df_abs)`` — the hot-shingle skew guard:
+    ``min(DF_CAP_FRAC * n_docs, DF_CAP_ABS)`` — the hot-shingle skew guard:
     one boilerplate shingle shared by 1% of a 100 TB corpus makes the
     candidate self-join quadratic in its posting-list length.
 
@@ -220,7 +218,7 @@ def df_capped(
     ``(f·n)² — still quadratic in the corpus``. Measured: the 10× scale
     rehearsal (scripts/scale_rehearsal.py) ran dd4 45× slower at 10× data
     under the fraction-only cap. The absolute cap bounds per-shingle work at
-    ``max_df_abs²/2`` pairs at any corpus size; the fractional cap keeps
+    ``DF_CAP_ABS²/2`` pairs at any corpus size; the fractional cap keeps
     small corpora from pairing on their commonest shingles. ``docs_total`` is
     a one-row (n_docs) aggregate, joined in as a broadcast literal — no
     driver action.
@@ -230,26 +228,20 @@ def df_capped(
         tok_df.crossJoin(F.broadcast(docs_total))
         .filter(
             F.col("df")
-            <= F.least(F.lit(max_df_frac) * F.col("n_docs"), F.lit(float(max_df_abs)))
+            <= F.least(F.lit(DF_CAP_FRAC) * F.col("n_docs"), F.lit(float(DF_CAP_ABS)))
         )
         .select("token")
     )
     return postings.join(keep, "token")
 
 
-def minhash_lsh_scores(
-    docs: DataFrame,
-    num_perm: int = 8,
-    rows_per_band: int = 2,
-    max_bucket: int | None = None,
-    text_col: str = "text",
-) -> DataFrame:
+def minhash_lsh_scores(docs: DataFrame, max_bucket: int | None = None) -> DataFrame:
     """The full MinHash-LSH near-dup pipeline as ONE reusable operator:
-    token sets → signatures → (capped) banded candidates → exact Jaccard.
-    Returns (doc1, doc2, jaccard) for every candidate pair. The dd2 query,
-    the dd6 component edges, and the scale rehearsal all consume THIS
-    function, so a pipeline change propagates everywhere the numbers are
-    cited.
+    token sets → signatures (8 permutations) → (capped) banded candidates
+    (4 bands of 2 rows) → exact Jaccard. Returns (doc1, doc2, jaccard) for
+    every candidate pair. The dd2 query, the dd6 component edges, and the
+    scale rehearsal all consume THIS function, so a pipeline change
+    propagates everywhere the numbers are cited.
 
     r15 continuation pass, two MEASURED REJECTIONS at this site (the dd2
     query body carries the kept fan-out instead — see there):
@@ -271,28 +263,27 @@ def minhash_lsh_scores(
       row-local band filter. The explode+partial-agg form keeps every md5
       inside whole-stage codegen and its exchange carries only per-doc
       partials."""
-    tok = doc_token_sets(docs, text_col)
-    sig = minhash_signatures(tok, num_perm=num_perm)
-    pairs = lsh_candidate_pairs(
-        sig, num_perm=num_perm, rows_per_band=rows_per_band, max_bucket=max_bucket
-    )
-    return jaccard_scores(pairs, doc_token_arrays(docs, text_col))
+    sig = minhash_signatures(doc_token_sets(docs), num_perm=8)
+    pairs = lsh_candidate_pairs(sig, num_perm=8, rows_per_band=2, max_bucket=max_bucket)
+    return jaccard_scores(pairs, doc_token_arrays(docs))
 
 
 NGRAM_JACCARD_CROSSOVER_DOCS = 100_000
+# Candidate pairs must differ by at most this many characters in length.
+NGRAM_MAX_DELTA_CHARS = 20
+# Big path: single-row MinHash bands over the shingle sets, and the
+# per-bucket cap of each band.
+NGRAM_NUM_PERM = 16
+NGRAM_MAX_BUCKET = 256
+# Big path: the auto gate broadcasts the verify side when the hashed
+# shingle arrays fit this many MB.
+NGRAM_VERIFY_BROADCAST_BUDGET_MB = 1024
 
 
 def ngram_jaccard_scores(
     docs: DataFrame,
-    max_df_frac: float = 0.05,
-    max_df_abs: int = 256,
-    max_delta_chars: int = 20,
-    text_col: str = "text",
     big_corpus: bool | None = None,
-    num_perm: int = 16,
-    max_bucket: int = 256,
     verify_broadcast: bool | None = None,
-    verify_broadcast_budget_mb: int = 1024,
 ) -> DataFrame:
     """The full n-gram-Jaccard near-dup pipeline as ONE reusable operator.
     Returns (doc1, doc2, jaccard). Shared by the dd4 query and the scale
@@ -308,11 +299,13 @@ def ngram_jaccard_scores(
     for 10× docs — Σ min(df, cap)² widens with the zipf mid-band even under
     the df cap):
 
-    * small (≤ ~10⁵ docs): bigram postings → DF cap (min(frac·n, abs)) →
-      shared-shingle self-join blocked by |Δn_chars| — exhaustive candidates
-      at small scale, where the Σdf² term is still cheap.
-    * big: MinHash banding OVER THE SAME BIGRAM SHINGLE SETS (``num_perm``
-      single-row bands, per-bucket cap ``max_bucket``) → |Δn_chars| block.
+    * small (≤ ~10⁵ docs): bigram postings → DF cap (``df_capped``) →
+      shared-shingle self-join blocked by |Δn_chars| ≤
+      ``NGRAM_MAX_DELTA_CHARS`` — exhaustive candidates at small scale,
+      where the Σdf² term is still cheap.
+    * big: MinHash banding OVER THE SAME BIGRAM SHINGLE SETS
+      (``NGRAM_NUM_PERM`` single-row bands, per-bucket cap
+      ``NGRAM_MAX_BUCKET``) → |Δn_chars| block.
       Candidate volume is corpus-linear per band under the bucket cap; a
       qualifying pair at Jaccard j is banded with prob 1−(1−j)^L — 0.99 at
       the 0.25 bar with L=16 — and the selection is md5-deterministic, so
@@ -327,7 +320,7 @@ def ngram_jaccard_scores(
     because banding is probabilistic, it can MISS pairs the exhaustive
     join finds — a pair at Jaccard j survives banding with prob
     1−(1−j)^L, i.e. ~1% of pairs sitting exactly AT the 0.25 bar are
-    missed at the default L=16 (the miss rate decays fast above the bar:
+    missed at L=16 (the miss rate decays fast above the bar:
     0.01% at j=0.44). Past the auto-gate dd4 is an approximation with
     that known recall profile, calibrated by dd9; the fixture pins cover
     path equality on corpora where no pair lands close enough to the bar
@@ -339,7 +332,8 @@ def ngram_jaccard_scores(
     array, and that sort's spill was the measured 500k→1M wall step
     (95 → 406 s, ~4× for 2×). On the auto big path, one sizing agg measures
     the exact hashed-array bytes (8·Σ|S_d| + 48·n) and verification
-    broadcasts the array side when it fits ``verify_broadcast_budget_mb`` —
+    broadcasts the array side when it fits
+    ``NGRAM_VERIFY_BROADCAST_BUDGET_MB`` —
     both attach joins go map-side, zero widened shuffles (ONE materialized
     copy: the second join's broadcast is an AQE ReusedExchange, pinned in
     tests). Callers forcing ``big_corpus=True`` (no hidden actions) pass
@@ -352,8 +346,8 @@ def ngram_jaccard_scores(
     (BENCH_LOCAL r13) measured the broadcast plan at 448.8 s while the
     unhinted plan DNF'd a 70 GB-free host on sort spill (516M candidate
     pairs × ~50-element shingle arrays). Single-host callers past the
-    ~2.2M-doc boundary of the default budget should raise
-    ``verify_broadcast_budget_mb`` to match their executor headroom."""
+    ~2.2M-doc boundary of the budget whose executors hold the arrays pass
+    ``big_corpus=True, verify_broadcast=True``."""
     from ..functions.text import token_bigrams
     from ..io import fan_out_small_scan
 
@@ -371,9 +365,9 @@ def ngram_jaccard_scores(
     # measured win in OPTIMIZATION_r14.md)
     docs = fan_out_small_scan(docs, "doc_id")
     if big_corpus:
-        sig = minhash_signatures(doc_shingle_sets(docs, text_col), num_perm=num_perm)
+        sig = minhash_signatures(doc_shingle_sets(docs), num_perm=NGRAM_NUM_PERM)
         cand = lsh_candidate_pairs(
-            sig, num_perm=num_perm, rows_per_band=1, max_bucket=max_bucket
+            sig, num_perm=NGRAM_NUM_PERM, rows_per_band=1, max_bucket=NGRAM_MAX_BUCKET
         )
         nc = docs.select("doc_id", "n_chars")
         pairs = (
@@ -383,7 +377,7 @@ def ngram_jaccard_scores(
             .join(
                 nc.withColumnsRenamed({"doc_id": "doc2", "n_chars": "nc2"}), "doc2"
             )
-            .filter(F.abs(F.col("nc1") - F.col("nc2")) <= max_delta_chars)
+            .filter(F.abs(F.col("nc1") - F.col("nc2")) <= NGRAM_MAX_DELTA_CHARS)
             .select("doc1", "doc2")
         )
         if verify_broadcast is None:
@@ -408,34 +402,32 @@ def ngram_jaccard_scores(
             else:
                 total_shingles = docs.agg(
                     F.sum(
-                        F.size(F.array_distinct(token_bigrams(F.col(text_col))))
+                        F.size(F.array_distinct(token_bigrams(F.col("text"))))
                     )
                 ).collect()[0][0]
                 verify_broadcast = (
                     (total_shingles or 0) * 8 + n_docs_known * 48
-                    <= verify_broadcast_budget_mb * 1024 * 1024
+                    <= NGRAM_VERIFY_BROADCAST_BUDGET_MB * 1024 * 1024
                 )
         return jaccard_scores(
-            pairs,
-            doc_shingle_arrays(docs, text_col),
-            broadcast_sets=bool(verify_broadcast),
+            pairs, doc_shingle_arrays(docs), broadcast_sets=bool(verify_broadcast)
         )
     docs_total = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    sh = df_capped(
-        doc_shingle_sets(docs, text_col), docs_total, max_df_frac, max_df_abs
-    ).join(docs.select("doc_id", "n_chars"), "doc_id")
+    sh = df_capped(doc_shingle_sets(docs), docs_total).join(
+        docs.select("doc_id", "n_chars"), "doc_id"
+    )
     a = sh.select(F.col("doc_id").alias("doc1"), F.col("n_chars").alias("nc1"), "token")
     b = sh.select(F.col("doc_id").alias("doc2"), F.col("n_chars").alias("nc2"), "token")
     pairs = (
         a.join(b, ["token"])
         .filter(
             (F.col("doc1") < F.col("doc2"))
-            & (F.abs(F.col("nc1") - F.col("nc2")) <= max_delta_chars)
+            & (F.abs(F.col("nc1") - F.col("nc2")) <= NGRAM_MAX_DELTA_CHARS)
         )
         .select("doc1", "doc2")
         .distinct()
     )
-    return jaccard_scores(pairs, doc_shingle_arrays(docs, text_col))
+    return jaccard_scores(pairs, doc_shingle_arrays(docs))
 
 
 def simhash16(tok: DataFrame) -> DataFrame:
@@ -476,17 +468,15 @@ def simhash16(tok: DataFrame) -> DataFrame:
     return sig.select("doc_id", fp.cast("int").alias("simhash"))
 
 
-def doc_shingle_sets(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_shingle_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) distinct token-bigram pairs for n-gram Jaccard."""
     return docs.select(
         "doc_id",
-        F.explode(F.array_distinct(token_bigrams(F.col(text_col)))).alias("token"),
+        F.explode(F.array_distinct(token_bigrams(F.col("text")))).alias("token"),
     )
 
 
-def dup_span_scrub(
-    docs: DataFrame, n: int = 5, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def dup_span_scrub(docs: DataFrame, n: int = 5) -> DataFrame:
     """Exact duplicated-span REMOVAL (dd10) — the transform half of the Lee
     et al. 2021 exact-substring-dedup signal that ``duplicate_span_stats``
     (dd7) measures: every token position covered by an n-token shingle that
@@ -523,14 +513,14 @@ def dup_span_scrub(
 
     # token + 5-gram explodes dominate — fan a one-split scan out to the
     # session's cores (no-op on real multi-split layouts)
-    docs = fan_out_small_scan(docs, id_col)
-    toks = tokens(F.col(text_col))
-    tok = docs.select(id_col, F.posexplode(toks).alias("pos", "tok"))
+    docs = fan_out_small_scan(docs, "doc_id")
+    toks = tokens(F.col("text"))
+    tok = docs.select("doc_id", F.posexplode(toks).alias("pos", "tok"))
     grams = docs.select(
-        id_col, F.posexplode(token_ngrams(F.col(text_col), n)).alias("start", "sh")
-    ).select(id_col, "start", F.xxhash64("sh").alias("k"))
+        "doc_id", F.posexplode(token_ngrams(F.col("text"), n)).alias("start", "sh")
+    ).select("doc_id", "start", F.xxhash64("sh").alias("k"))
     dup = (
-        grams.select("k", id_col)
+        grams.select("k", "doc_id")
         .distinct()
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -540,15 +530,15 @@ def dup_span_scrub(
     covered = (
         grams.join(dup, "k")
         .select(
-            id_col,
+            "doc_id",
             F.explode(
                 F.sequence(F.col("start"), F.col("start") + F.lit(n - 1))
             ).alias("pos"),
         )
         .distinct()
     )
-    kept = tok.join(covered, [id_col, "pos"], "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
+    kept = tok.join(covered, ["doc_id", "pos"], "left_anti")
+    rebuilt = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.array_join(
             F.transform(
@@ -558,18 +548,16 @@ def dup_span_scrub(
             " ",
         ).alias("clean_text"),
     )
-    base = docs.select(id_col, token_count(F.col(text_col)).cast("bigint").alias("n_tokens"))
-    return base.join(rebuilt, id_col, "left").select(
-        id_col,
+    base = docs.select("doc_id", token_count(F.col("text")).cast("bigint").alias("n_tokens"))
+    return base.join(rebuilt, "doc_id", "left").select(
+        "doc_id",
         "n_tokens",
         F.coalesce(F.col("n_kept"), F.lit(0)).cast("bigint").alias("n_kept"),
         F.md5(F.coalesce(F.col("clean_text"), F.lit(""))).alias("clean_md5"),
     )
 
 
-def duplicate_span_stats(
-    docs: DataFrame, n: int = 5, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def duplicate_span_stats(docs: DataFrame, n: int = 5) -> DataFrame:
     """Per-document duplicated-span statistics (dd7): a span = an n-token
     shingle occurring in >= 2 DISTINCT documents; returns (doc_id,
     n_shingles, n_dup, dup_frac) counting OCCURRENCES, i.e. the
@@ -593,16 +581,16 @@ def duplicate_span_stats(
 
     # the n-gram explode dominates — fan a one-split scan out to the
     # session's cores (no-op on real multi-split layouts)
-    docs = fan_out_small_scan(docs, id_col)
+    docs = fan_out_small_scan(docs, "doc_id")
     post = (
-        docs.select(id_col, F.explode(token_ngrams(F.col(text_col), n)).alias("sh"))
-        .select(id_col, F.xxhash64("sh").alias("k"))
+        docs.select("doc_id", F.explode(token_ngrams(F.col("text"), n)).alias("sh"))
+        .select("doc_id", F.xxhash64("sh").alias("k"))
     )
-    occ = post.groupBy("k", id_col).agg(F.count(F.lit(1)).alias("occ"))
+    occ = post.groupBy("k", "doc_id").agg(F.count(F.lit(1)).alias("occ"))
     dfreq = occ.groupBy("k").agg(F.count(F.lit(1)).alias("n_docs"))
     return (
         occ.join(dfreq, "k")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("occ").cast("bigint").alias("n_shingles"),
             F.sum(F.when(F.col("n_docs") >= 2, F.col("occ")).otherwise(0))
@@ -610,7 +598,7 @@ def duplicate_span_stats(
             .alias("n_dup"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_shingles",
             "n_dup",
             F.round(F.col("n_dup") * 1.0 / F.col("n_shingles"), 6).alias("dup_frac"),
@@ -618,24 +606,27 @@ def duplicate_span_stats(
     )
 
 
-def cdc_chunks(
-    docs: DataFrame,
-    modulus: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+# Token-level CDC cut rule: a token whose hash is 0 mod CDC_MODULUS ends a
+# chunk (expected chunk length CDC_MODULUS tokens); the guarded rule honors a
+# boundary only past CDC_MIN_LEN tokens and forces a cut at CDC_MAX_LEN.
+CDC_MODULUS = 16
+CDC_MIN_LEN = 8
+CDC_MAX_LEN = 32
+
+
+def cdc_chunks(docs: DataFrame) -> DataFrame:
     """Token-level content-defined chunking (the LBFS/FastCDC cut-point
     idea at token granularity): a token whose content hash satisfies
-    ``h % modulus == 0`` ENDS a chunk, so chunk boundaries depend only on
+    ``h % CDC_MODULUS == 0`` ENDS a chunk, so chunk boundaries depend only on
     local content — insert or delete a token and every boundary outside
     its chunk stays put, which is why CDC chunk stores resynchronize
     across document versions where fixed-size chunking desyncs everything
-    downstream of the edit. Expected chunk length is ``modulus`` tokens
-    with a geometric tail (P(len > L) = (1 - 1/modulus)^L); production
+    downstream of the edit. Expected chunk length is ``CDC_MODULUS`` tokens
+    with a geometric tail (P(len > L) = (1 - 1/CDC_MODULUS)^L); production
     stores add min/max cut guards on top — a business rule on the same
     boundary stream, deliberately not modeled here.
 
-    Returns one row per (doc, chunk): ``(id_col, chunk, n_tokens, fp)``
+    Returns one row per (doc, chunk): ``(doc_id, chunk, n_tokens, fp)``
     where ``fp`` is md5 of the chunk's space-joined tokens — the chunk
     store's content address. Hashes are md5 throughout so the DuckDB
     oracle replays the byte-identical algorithm (this file's rule).
@@ -643,29 +634,29 @@ def cdc_chunks(
     Shuffle shape: ONE exchange of token rows keyed by document — the
     boundary cumsum's per-doc window and the (doc, chunk) rebuild share
     that partitioning, and each group's state is one chunk's tokens
-    (geometric, mean ``modulus``). Nothing corpus-wide shuffles here;
+    (geometric, mean ``CDC_MODULUS``). Nothing corpus-wide shuffles here;
     consumers aggregate the 16-byte fps (see ``cdc_chunk_dedup_stats``).
     """
     tok = docs.select(
-        id_col, F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "token")
+        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "token")
     )
     h = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint")
     from pyspark.sql.window import Window
 
     w = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     chunked = tok.withColumn(
         "chunk",
-        F.coalesce(F.sum((h % modulus == 0).cast("bigint")).over(w), F.lit(0)),
+        F.coalesce(F.sum((h % CDC_MODULUS == 0).cast("bigint")).over(w), F.lit(0)),
     )
     ordered = F.transform(
         F.array_sort(F.collect_list(F.struct("pos", "token"))),
         lambda s: s["token"],
     )
-    return chunked.groupBy(id_col, "chunk").agg(
+    return chunked.groupBy("doc_id", "chunk").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
         F.md5(F.array_join(ordered, " ")).alias("fp"),
     )
@@ -703,31 +694,19 @@ def chunk_dedup_ledger(chunks: DataFrame) -> DataFrame:
     )
 
 
-def cdc_chunk_dedup_stats(
-    docs: DataFrame,
-    modulus: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cdc_chunk_dedup_stats(docs: DataFrame) -> DataFrame:
     """Corpus-wide CDC chunk-dedup yield, bucketed by chunk length (see
     ``chunk_dedup_ledger``). The length histogram doubles as a receipt of
     the cut-point statistics (geometric decay away from short lengths)."""
-    return chunk_dedup_ledger(cdc_chunks(docs, modulus, id_col, text_col))
+    return chunk_dedup_ledger(cdc_chunks(docs))
 
 
-def cdc_chunks_guarded(
-    docs: DataFrame,
-    modulus: int = 16,
-    min_len: int = 8,
-    max_len: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cdc_chunks_guarded(docs: DataFrame) -> DataFrame:
     """``cdc_chunks`` with the min/max cut guards every production chunk
     store adds (FastCDC's actual shape): a content boundary is honored
-    only if the chunk it would close has >= ``min_len`` tokens, and a cut
-    is FORCED at ``max_len`` when no acceptable boundary arrives — so
-    chunk sizes live in [min_len, max_len] (the final tail may be
+    only if the chunk it would close has >= ``CDC_MIN_LEN`` tokens, and a
+    cut is FORCED at ``CDC_MAX_LEN`` when no acceptable boundary arrives —
+    so chunk sizes live in [CDC_MIN_LEN, CDC_MAX_LEN] (the final tail may be
     shorter), killing both the geometric tail's tiny chunks (metadata
     overhead) and its unbounded heads (transfer granularity).
 
@@ -758,25 +737,25 @@ def cdc_chunks_guarded(
     from collections.abc import Iterator
 
     tok = docs.select(
-        id_col, F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "token")
+        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "token")
     )
     h = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint")
     flagged = (
-        tok.withColumn("b", (h % modulus == 0).cast("int"))
-        .repartition(F.col(id_col))
-        .sortWithinPartitions(id_col, "pos")
+        tok.withColumn("b", (h % CDC_MODULUS == 0).cast("int"))
+        .repartition(F.col("doc_id"))
+        .sortWithinPartitions("doc_id", "pos")
     )
 
     def scan_doc(doc: int, toks, flags, out: list) -> None:
         # Vectorized cut scan (r15 optimization pass, the r14 verdict's #7
         # A/B): the former form walked every token position in Python
-        # (O(n · max_len) flag probes per doc). Now boundary positions come
+        # (O(n · CDC_MAX_LEN) flag probes per doc). Now boundary positions come
         # from ONE np.flatnonzero and each cut is a binary search into
         # them, the doc is joined to a string once, and each chunk is a
         # char-offset SLICE of it (cumsum of token lengths) instead of a
         # per-chunk list join — the per-cut Python work is O(log B) + one
-        # md5. Identical cut rule: first boundary in [c+min_len,
-        # min(c+max_len, n)], else forced at min(c+max_len, n).
+        # md5. Identical cut rule: first boundary in [c+CDC_MIN_LEN,
+        # min(c+CDC_MAX_LEN, n)], else forced at min(c+CDC_MAX_LEN, n).
         n = len(toks)
         bpos = np.flatnonzero(flags) + 1  # 1-based boundary token positions
         text = " ".join(toks)
@@ -784,8 +763,8 @@ def cdc_chunks_guarded(
         sep_ends = np.cumsum(lens + 1)  # char index just past token i (+sep)
         c, k = 0, 0
         while c < n:
-            hi = min(c + max_len, n)
-            i = np.searchsorted(bpos, c + min_len)
+            hi = min(c + CDC_MAX_LEN, n)
+            i = np.searchsorted(bpos, c + CDC_MIN_LEN)
             nxt = int(bpos[i]) if i < len(bpos) and bpos[i] <= hi else hi
             start = int(sep_ends[c - 1]) if c else 0
             fp = hashlib.md5(
@@ -795,12 +774,12 @@ def cdc_chunks_guarded(
             k += 1
             c = nxt
 
-    cols = [id_col, "chunk", "n_tokens", "fp"]
+    cols = ["doc_id", "chunk", "n_tokens", "fp"]
 
     def scan_frame(pdf: pd.DataFrame, out: list) -> None:
         # split into per-doc runs with one vectorized boundary scan instead
         # of a pandas groupby (rows arrive sorted by (doc, pos))
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["doc_id"].to_numpy()
         toks = pdf["token"].to_numpy()
         flags = pdf["b"].to_numpy()
         cuts = np.flatnonzero(ids[1:] != ids[:-1]) + 1
@@ -818,8 +797,8 @@ def cdc_chunks_guarded(
             if len(pdf) == 0:
                 continue
             # the last doc may continue in the next Arrow batch: hold it
-            last = pdf[id_col].iloc[-1]
-            mask = pdf[id_col] == last
+            last = pdf["doc_id"].iloc[-1]
+            mask = pdf["doc_id"] == last
             carry = pdf[mask]
             done = pdf[~mask]
             if len(done):
@@ -832,5 +811,5 @@ def cdc_chunks_guarded(
             yield pd.DataFrame(out, columns=cols)
 
     return flagged.mapInPandas(
-        scan_batches, f"{id_col} long, chunk long, n_tokens long, fp string"
+        scan_batches, "doc_id long, chunk long, n_tokens long, fp string"
     )

@@ -22,25 +22,27 @@ def equality_filter(df: DataFrame, col: str, value) -> DataFrame:
     return df.filter(F.col(col) == F.lit(value))
 
 
-def latest_partition(df: DataFrame, part_col: Column, alias: str = "part") -> DataFrame:
-    """P7 (ref Dash.py:209-210): rows belonging to the max partition value.
+def latest_partition(df: DataFrame, part_col: Column) -> DataFrame:
+    """P7 (ref Dash.py:209-210): rows belonging to the max partition value,
+    which is kept as column ``d``.
 
     A scalar aggregate broadcast — equivalent to the SQL scalar subquery — so
     the max never round-trips through the driver. With a date/partition column
     this also triggers dynamic partition pruning on a partitioned layout.
     """
-    part = part_col.alias(alias)
-    latest = df.select(part).agg(F.max(alias).alias("__latest"))
+    part = part_col.alias("d")
+    latest = df.select(part).agg(F.max("d").alias("__latest"))
     return (
-        df.withColumn(alias, part)
+        df.withColumn("d", part)
         .crossJoin(F.broadcast(latest))
-        .filter(F.col(alias) == F.col("__latest"))
+        .filter(F.col("d") == F.col("__latest"))
         .drop("__latest")
     )
 
 
-def sigma_outlier_flag(df: DataFrame, measure: str, k: float = 3.0) -> DataFrame:
-    """P8 (ref TrafficAnalysis.py:410-413): flag rows outside mean ± k·stddev.
+def sigma_outlier_flag(df: DataFrame, measure: str) -> DataFrame:
+    """P8 (ref TrafficAnalysis.py:410-413): flag rows outside mean ± 3·stddev,
+    the reference's fixed abnormal-traffic band.
 
     Uses stddev_samp to match pandas ``std()`` (sample, ddof=1).
     """
@@ -51,8 +53,8 @@ def sigma_outlier_flag(df: DataFrame, measure: str, k: float = 3.0) -> DataFrame
     flagged = df.crossJoin(F.broadcast(stats)).withColumn(
         "is_abnormal",
         (
-            (c > F.col("__mu") + k * F.col("__sigma"))
-            | (c < F.col("__mu") - k * F.col("__sigma"))
+            (c > F.col("__mu") + 3.0 * F.col("__sigma"))
+            | (c < F.col("__mu") - 3.0 * F.col("__sigma"))
         ).cast("int"),
     )
     return flagged.drop("__mu", "__sigma")

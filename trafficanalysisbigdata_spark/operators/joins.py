@@ -17,10 +17,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Broadcast-hash join against a small dimension: no shuffle of the fact
-    side, each task streams its partition against an in-memory hash map."""
-    return fact.join(F.broadcast(dim), on, how)
+def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on) -> DataFrame:
+    """Broadcast-hash inner join against a small dimension: no shuffle of the
+    fact side, each task streams its partition against an in-memory hash map."""
+    return fact.join(F.broadcast(dim), on, "inner")
 
 
 def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
@@ -71,9 +71,8 @@ def range_join(
     equi: Column,
     lo: Column,
     hi: Column,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi + band predicate. The equi key keeps this a hash/sort-merge join
+    """Inner equi + band predicate. The equi key keeps this a hash/sort-merge join
     (the band is evaluated as a post-join filter); without an equi key Spark
     would produce a broadcast-nested-loop — unusable at scale."""
-    return left.join(right, equi & lo & hi, how)
+    return left.join(right, equi & lo & hi, "inner")

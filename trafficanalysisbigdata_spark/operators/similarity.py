@@ -57,9 +57,7 @@ def plane_component(table: int, plane: int, dim_i: int) -> float:
     return int(h[:8], 16) / float(16**8) - 0.5
 
 
-def plane_matrix(
-    n_tables: int, n_planes: int, dim: int, table_offset: int = 0
-) -> np.ndarray:
+def plane_matrix(n_tables: int, n_planes: int, dim: int, table_offset: int) -> np.ndarray:
     """(n_tables * n_planes, dim) hyperplane matrix; row t*P+p = plane p of
     table ``table_offset + t``. The offset lets a staged caller
     (``lsh_neardup_pairs_staged``) generate DISJOINT table groups — table
@@ -80,11 +78,9 @@ def multi_table_buckets(
     n_tables: int,
     n_planes: int,
     dim: int,
-    vec_col: str = "embedding",
-    out_col: str = "buckets",
     table_offset: int = 0,
 ) -> DataFrame:
-    """Append ``out_col``: array of ``n_tables`` sign-bit bucket ids
+    """Append ``buckets``: array of ``n_tables`` sign-bit bucket ids
     (bit p of table t = (v · plane_{t,p}) >= 0).
 
     One Arrow-batched matmul per partition batch — the per-row cost is
@@ -110,7 +106,7 @@ def multi_table_buckets(
         sigs = bits @ weights  # (batch, L)
         return pd.Series(list(sigs.astype(np.int32)))
 
-    return df.withColumn(out_col, _buckets.asNondeterministic()(F.col(vec_col)))
+    return df.withColumn("buckets", _buckets.asNondeterministic()(F.col("embedding")))
 
 
 def _exploded_buckets(
@@ -118,8 +114,6 @@ def _exploded_buckets(
     n_tables: int,
     n_planes: int,
     dim: int,
-    id_col: str,
-    vec_col: str,
     id_alias: str,
     table_offset: int = 0,
 ) -> DataFrame:
@@ -132,8 +126,8 @@ def _exploded_buckets(
     the cosine scoring they drag the whole stage into interpreted eval. The
     distinct's stage boundary keeps scoring in codegen.)"""
     return (
-        multi_table_buckets(df, n_tables, n_planes, dim, vec_col, table_offset=table_offset)
-        .select(F.col(id_col).alias(id_alias), F.posexplode("buckets").alias("t", "bucket"))
+        multi_table_buckets(df, n_tables, n_planes, dim, table_offset=table_offset)
+        .select(F.col("vec_id").alias(id_alias), F.posexplode("buckets").alias("t", "bucket"))
     )
 
 
@@ -141,8 +135,6 @@ def brute_force_topk(
     corpus: DataFrame,
     probes: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each probe (self-matches excluded).
 
@@ -150,14 +142,14 @@ def brute_force_topk(
     set is stable under float reassociation across engines/partitionings.
     """
     p = probes.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        norm(as_double(F.col(vec_col))).alias("qn"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+        norm(as_double(F.col("embedding"))).alias("qn"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        norm(as_double(F.col(vec_col))).alias("cn"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("vec"),
+        norm(as_double(F.col("embedding"))).alias("cn"),
     )
     scored = (
         c.crossJoin(F.broadcast(p))
@@ -186,8 +178,6 @@ def lsh_topk(
     n_tables: int | None = 16,
     n_planes: int | None = None,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_rows: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: score only candidates colliding with the probe in
@@ -209,8 +199,8 @@ def lsh_topk(
             n_planes = adaptive_n_planes(n_known)
         if n_tables is None:
             n_tables = adaptive_n_tables_topk(n_known)
-    cb = _exploded_buckets(corpus, n_tables, n_planes, dim, id_col, vec_col, "neighbor_id")
-    pb = _exploded_buckets(probes, n_tables, n_planes, dim, id_col, vec_col, "query_id")
+    cb = _exploded_buckets(corpus, n_tables, n_planes, dim, "neighbor_id")
+    pb = _exploded_buckets(probes, n_tables, n_planes, dim, "query_id")
     cand = (
         cb.join(pb, ["t", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -220,18 +210,18 @@ def lsh_topk(
     scored = (
         cand.join(
             corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("vec"),
-                norm(as_double(F.col(vec_col))).alias("cn"),
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("embedding").alias("vec"),
+                norm(as_double(F.col("embedding"))).alias("cn"),
             ),
             "neighbor_id",
         )
         .join(
             F.broadcast(
                 probes.select(
-                    F.col(id_col).alias("query_id"),
-                    F.col(vec_col).alias("query_vec"),
-                    norm(as_double(F.col(vec_col))).alias("qn"),
+                    F.col("vec_id").alias("query_id"),
+                    F.col("embedding").alias("query_vec"),
+                    norm(as_double(F.col("embedding"))).alias("qn"),
                 )
             ),
             "query_id",
@@ -278,13 +268,18 @@ def table_bucket_capped(buckets: DataFrame, max_bucket: int) -> DataFrame:
 NEARDUP_P_CAP = 14
 
 
-def adaptive_n_planes(
-    n: int, floor: int = 4, cap: int = 16, target_bucket: int = 128
-) -> int:
+# adaptive_n_planes: the expected per-table bucket occupancy the P rule
+# holds, and its floor (every corpus under 4096 vectors derives P=4).
+LSH_TARGET_BUCKET = 128
+LSH_P_FLOOR = 4
+
+
+def adaptive_n_planes(n: int, cap: int = 16) -> int:
     """The n_planes dial as CODE (dd5's k∝√n discipline applied to LSH
     banding): per-table candidate-pair volume is ~n²/2^P at uniform
-    occupancy, so holding expected bucket size at ``target_bucket`` means
-    2^P ∝ n, i.e. P = log2(n / target_bucket). Clamped to [floor, cap]:
+    occupancy, so holding expected bucket size at ``LSH_TARGET_BUCKET``
+    means 2^P ∝ n, i.e. P = log2(n / LSH_TARGET_BUCKET). Clamped to
+    [LSH_P_FLOOR, cap]:
     the floor keeps toy corpora at the oracle-mirrored P=4 (any corpus
     < 4096 vectors derives 4, which covers every driver SF); the cap at 16
     carries the rule to ~16M vectors before bucket growth resumes (raised
@@ -314,9 +309,9 @@ def adaptive_n_planes(
     divides candidate volume 4× right where the growth was."""
     import math
 
-    if n <= target_bucket:
-        return floor
-    return max(floor, min(cap, int(math.log2(n / target_bucket))))
+    if n <= LSH_TARGET_BUCKET:
+        return LSH_P_FLOOR
+    return max(LSH_P_FLOOR, min(cap, int(math.log2(n / LSH_TARGET_BUCKET))))
 
 
 def adaptive_n_tables_topk(n: int) -> int:
@@ -352,21 +347,22 @@ def adaptive_n_tables_topk(n: int) -> int:
     return 48
 
 
-def adaptive_n_tables(
-    n_planes: int,
-    threshold: float,
-    target_recall: float = 0.9,
-    floor: int = 8,
-    cap: int = 64,
-) -> int:
+# adaptive_n_tables: the recall held at the similarity bar, and the clamp
+# [LSH_L_FLOOR, LSH_L_CAP] on the table count.
+LSH_TARGET_RECALL = 0.9
+LSH_L_FLOOR = 8
+LSH_L_CAP = 64
+
+
+def adaptive_n_tables(n_planes: int, threshold: float) -> int:
     """The L dial that keeps OR-amplified recall AT THE SIMILARITY BAR
     constant while ``adaptive_n_planes`` deepens banding with the corpus:
     a pair at cosine ``threshold`` agrees with one random hyperplane with
     probability p = 1 − θ/π (θ = arccos(threshold)), collides per table
-    with p^P, so L ≥ ln(1 − target_recall) / ln(1 − p^P) tables give
-    recall ≥ target_recall for every pair AT OR ABOVE the bar (recall is
-    monotone in cosine). Clamped: the floor keeps toy corpora at a stable
-    layout, the cap bounds the explode volume (n·L bucket rows) — hitting
+    with p^P, so L ≥ ln(1 − LSH_TARGET_RECALL) / ln(1 − p^P) tables give
+    recall ≥ LSH_TARGET_RECALL for every pair AT OR ABOVE the bar (recall
+    is monotone in cosine). Clamped: the floor keeps toy corpora at a
+    stable layout, the cap bounds the explode volume (n·L bucket rows) — hitting
     it means the (P, threshold) combination demands more amplification
     than one LSH stage should carry, and the right move is a coarser P or
     a re-rank stage (sim9's two-stage shape). At (P=12, bar 0.8):
@@ -377,9 +373,9 @@ def adaptive_n_tables(
     p = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
     hit = p**n_planes
     if hit >= 1.0 or hit <= 0.0:
-        return floor
-    need = math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - hit))
-    return max(floor, min(cap, need))
+        return LSH_L_FLOOR
+    need = math.ceil(math.log(1.0 - LSH_TARGET_RECALL) / math.log(1.0 - hit))
+    return max(LSH_L_FLOOR, min(LSH_L_CAP, need))
 
 
 def lsh_neardup_pairs(
@@ -388,8 +384,6 @@ def lsh_neardup_pairs(
     n_tables: int | None = 16,
     n_planes: int | None = None,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket: int | None = None,
     n_rows: int | None = None,
     table_offset: int = 0,
@@ -503,8 +497,6 @@ def lsh_neardup_pairs(
             n_tables=n_tables,
             n_planes=n_planes,
             dim=dim,
-            id_col=id_col,
-            vec_col=vec_col,
             max_bucket=max_bucket,
             n_rows=n_known,
             group_size=group_size,
@@ -516,8 +508,6 @@ def lsh_neardup_pairs(
         n_tables,
         n_planes,
         dim,
-        id_col,
-        vec_col,
         max_bucket,
         n_known,
         table_offset,
@@ -531,8 +521,6 @@ def _lsh_pairs_single_pass(
     n_tables: int,
     n_planes: int,
     dim: int,
-    id_col: str,
-    vec_col: str,
     max_bucket: int | None,
     n_known: int | None,
     table_offset: int,
@@ -553,7 +541,7 @@ def _lsh_pairs_single_pass(
     pointless triple shuffle on a cluster. Past the broadcast budget the
     router above stages instead."""
     ba = _exploded_buckets(
-        corpus, n_tables, n_planes, dim, id_col, vec_col, "id1",
+        corpus, n_tables, n_planes, dim, "id1",
         table_offset=table_offset,
     )
     if max_bucket is not None:
@@ -568,9 +556,9 @@ def _lsh_pairs_single_pass(
     # norms ride the vector attach (one fold per ROW); pair scoring is then
     # a single dot fold per candidate — see functions.vectors.cosine_prenorm
     v = corpus.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        norm(as_double(F.col(vec_col))).alias("n"),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("v"),
+        norm(as_double(F.col("embedding"))).alias("n"),
     )
     # ~(8·dim + 48) bytes per prenormed row; 512 MB default broadcast budget
     # (callers with verified executor headroom may raise it — the staged 1M
@@ -618,8 +606,6 @@ def lsh_neardup_pairs_staged(
     n_tables: int | None = None,
     n_planes: int | None = None,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket: int | None = None,
     n_rows: int | None = None,
     group_size: int = 4,
@@ -686,8 +672,6 @@ def lsh_neardup_pairs_staged(
             g,
             n_planes,
             dim,
-            id_col,
-            vec_col,
             max_bucket,
             n_known,
             off,
@@ -705,9 +689,6 @@ def ivf_topk(
     k: int,
     n_clusters: int = 16,
     n_probe: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: a k-means coarse quantizer
     partitions the corpus into cluster lists; each probe scores only the
@@ -722,31 +703,28 @@ def ivf_topk(
     cluster id — never a corpus cross join. Fit cost is MLlib's distributed
     k-means, amortized over the query batch; ``build_ivf_index`` +
     ``ivf_topk_indexed`` persist the fit so query time pays none of it."""
-    assigned, centers = _ivf_fit(corpus, n_clusters, id_col, vec_col, seed)
-    return _ivf_query(
-        assigned, centers, probes, k, n_probe, id_col, vec_col, _sq_dist_key()
-    )
+    assigned, centers = _ivf_fit(corpus, n_clusters)
+    return _ivf_query(assigned, centers, probes, k, n_probe, _sq_dist_key())
 
 
-def _ivf_fit(
-    corpus: DataFrame, n_clusters: int, id_col: str, vec_col: str, seed: int
-) -> tuple[DataFrame, DataFrame]:
-    """Fit the k-means coarse quantizer; return (assignments, centroids).
+def _ivf_fit(corpus: DataFrame, n_clusters: int) -> tuple[DataFrame, DataFrame]:
+    """Fit the k-means coarse quantizer (fixed seed 42, so a rebuilt index
+    reproduces); return (assignments, centroids).
     Assignments carry the vector and its precomputed norm so query-time
     scoring is one fold per pair."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     spark = corpus.sparkSession
-    as_dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    as_dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     corpus_v = corpus.withColumn("__v", array_to_vector(as_dbl))
     model = KMeans(
-        k=n_clusters, seed=seed, featuresCol="__v", predictionCol="__cluster"
+        k=n_clusters, seed=42, featuresCol="__v", predictionCol="__cluster"
     ).fit(corpus_v)
     assigned = model.transform(corpus_v).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        norm(as_double(F.col(vec_col))).alias("cn"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("vec"),
+        norm(as_double(F.col("embedding"))).alias("cn"),
         F.col("__cluster").alias("cl"),
     )
     centers = spark.createDataFrame(
@@ -760,9 +738,6 @@ def build_ivf_index(
     corpus: DataFrame,
     index_dir: str,
     n_clusters: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> None:
     """Persist the IVF index: assignments parquet PARTITIONED BY cluster id
     (``{index_dir}/assignments/cl=N/``) + a centroids table.
@@ -773,7 +748,7 @@ def build_ivf_index(
     partition pruning turns it into a partition filter on the scan. The fit
     (the expensive stage) runs once here; ``ivf_topk_indexed`` pays none of
     it."""
-    assigned, centers = _ivf_fit(corpus, n_clusters, id_col, vec_col, seed)
+    assigned, centers = _ivf_fit(corpus, n_clusters)
     assigned.write.mode("overwrite").partitionBy("cl").parquet(f"{index_dir}/assignments")
     centers.write.mode("overwrite").parquet(f"{index_dir}/centroids")
 
@@ -784,8 +759,6 @@ def ivf_topk_indexed(
     probes: DataFrame,
     k: int,
     n_probe: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF top-k against a persisted index (``build_ivf_index``): no fit
     stage — centroids load as a broadcast dimension, assignments scan only
@@ -793,7 +766,7 @@ def ivf_topk_indexed(
     assigned = spark.read.parquet(f"{index_dir}/assignments")
     centers = spark.read.parquet(f"{index_dir}/centroids")
     return _ivf_query(
-        assigned, centers, probes, k, n_probe, id_col, vec_col, _sq_dist_key()
+        assigned, centers, probes, k, n_probe, _sq_dist_key()
     )
 
 
@@ -818,8 +791,6 @@ def _ivf_query(
     probes: DataFrame,
     k: int,
     n_probe: int,
-    id_col: str,
-    vec_col: str,
     shortlist_key: Column,
 ) -> DataFrame:
     """Shared IVF query path: broadcast centroid shortlist → cluster-id
@@ -834,9 +805,9 @@ def _ivf_query(
     what makes the query stage over a persisted index value-oracle-checkable
     (sim6x, sim8) rather than rows-only."""
     p = probes.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        norm(as_double(F.col(vec_col))).alias("qn"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+        norm(as_double(F.col("embedding"))).alias("qn"),
     )
     wshort = Window.partitionBy("query_id").orderBy(F.col("d").asc_nulls_last(), "cl")
     shortlist = (
@@ -866,22 +837,20 @@ def _ivf_query(
     )
 
 
-def threshold_pairs(
-    corpus: DataFrame, threshold: float, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def threshold_pairs(corpus: DataFrame, threshold: float) -> DataFrame:
     """All-pairs cosine ≥ threshold. O(n²) — the small-n correctness baseline
     only; ``lsh_neardup_pairs`` is the registered scale path."""
     # prenorm/precast (r14): casts and norm folds once per row, one dot fold
     # per pair — bit-identical to cosine() (functions/vectors.py contract)
     a = corpus.select(
-        F.col(id_col).alias("id1"),
-        as_double(F.col(vec_col)).alias("v1"),
-        norm(as_double(F.col(vec_col))).alias("n1"),
+        F.col("vec_id").alias("id1"),
+        as_double(F.col("embedding")).alias("v1"),
+        norm(as_double(F.col("embedding"))).alias("n1"),
     )
     b = corpus.select(
-        F.col(id_col).alias("id2"),
-        as_double(F.col(vec_col)).alias("v2"),
-        norm(as_double(F.col(vec_col))).alias("n2"),
+        F.col("vec_id").alias("id2"),
+        as_double(F.col("embedding")).alias("v2"),
+        norm(as_double(F.col("embedding"))).alias("n2"),
     )
     return (
         a.join(b, F.col("id1") < F.col("id2"))
@@ -954,8 +923,6 @@ def two_level_assign(
     corpus: DataFrame,
     cent: DataFrame,
     n_super: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Two-level nearest-centroid assignment — the production path past the
     measured n·k wall (round-8 rehearsal: 500k vectors × 1000 centroids is
@@ -998,7 +965,7 @@ def two_level_assign(
         cent.select("cid", F.col("center").alias("vec")), sup, "cid", "sid"
     ).select("sid", "cid", F.col("vec").alias("center"))
     v2s = _argmax_cosine(
-        corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")),
+        corpus.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec")),
         sup,
         "vid",
         "sid",
@@ -1051,8 +1018,6 @@ def centroid_semantic_dedup(
     corpus: DataFrame,
     n_centroids: int = 8,
     threshold: float = 0.30,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     assignment: str = "auto",
 ) -> DataFrame:
     """IVF-style semantic dedup: a deterministic coarse quantizer partitions
@@ -1103,9 +1068,9 @@ def centroid_semantic_dedup(
         raise ValueError(f"unknown assignment strategy: {assignment!r}")
     cent = (
         corpus.select(
-            F.col(id_col).alias("cid"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            F.col(vec_col).alias("center"),
+            F.col("vec_id").alias("cid"),
+            F.md5(F.col("vec_id").cast("string")).alias("__h"),
+            F.col("embedding").alias("center"),
         )
         .orderBy("__h", "cid")
         .limit(n_centroids)
@@ -1115,10 +1080,10 @@ def centroid_semantic_dedup(
         assignment = "two_level" if n_centroids >= 200 else "flat"
     if assignment == "two_level":
         n_super = max(2, math.isqrt(max(n_centroids - 1, 0)) + 1)  # ceil(sqrt k)
-        assigned = two_level_assign(corpus, cent, n_super, id_col, vec_col)
+        assigned = two_level_assign(corpus, cent, n_super)
     else:
         assigned = _argmax_cosine(
-            corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")),
+            corpus.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec")),
             cent,
             "vid",
             "cid",
@@ -1160,8 +1125,9 @@ def centroid_semantic_dedup(
     )
 
 
-def int8_quantized(vec_col: str = "embedding", out_col: str = "qv"):
-    """Symmetric per-vector int8 quantization as a pure Catalyst column:
+def int8_quantized(out_col: str = "qv"):
+    """Symmetric per-vector int8 quantization of ``embedding`` as a pure
+    Catalyst column named ``out_col``:
     scale = 127 / max|x_i|, q_i = floor(x_i * scale + 0.5) (half-up — both
     engines' IEEE doubles agree on floor, unlike round()'s mode-dependent
     ties). Zero vectors quantize to all-zero (nullif guard).
@@ -1179,9 +1145,9 @@ def int8_quantized(vec_col: str = "embedding", out_col: str = "qv"):
     argument is an ordinary child expression evaluated once per row.
     Measured on sim7 at sf0.1: ~1.4 s -> ~0.8 s, byte-identical output.
     """
-    scale = f"127.0D / nullif(array_max(transform({vec_col}, y -> abs(cast(y as double)))), 0.0D)"
+    scale = "127.0D / nullif(array_max(transform(embedding, y -> abs(cast(y as double)))), 0.0D)"
     return F.expr(
-        f"zip_with({vec_col}, array_repeat({scale}, size({vec_col})),"
+        f"zip_with(embedding, array_repeat({scale}, size(embedding)),"
         f" (x, s) -> coalesce(cast(floor(cast(x as double) * s + 0.5D) as int), 0))"
     ).alias(out_col)
 
@@ -1190,8 +1156,6 @@ def quantized_topk(
     corpus: DataFrame,
     probes: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k neighbors per probe ranked by the COSINE OF THE QUANTIZED
     vectors: qcos = qdot / sqrt(q_aa * q_bb), where qdot and the self-dots
@@ -1226,16 +1190,16 @@ def quantized_topk(
     column the plan already carries (round-9 advice).
     """
     self_dot = "aggregate(transform({c}, x -> cast(x as bigint) * x), 0L, (acc, v) -> acc + v)"
-    nonzero = f"exists({vec_col}, y -> cast(y as double) != 0.0D)"
+    nonzero = "exists(embedding, y -> cast(y as double) != 0.0D)"
     p = (
         probes.filter(F.expr(nonzero))
-        .select(F.col(id_col).alias("query_id"), int8_quantized(vec_col, "q_qv"))
+        .select(F.col("vec_id").alias("query_id"), int8_quantized("q_qv"))
         .withColumn("q_nn", F.expr(self_dot.format(c="q_qv")))
         .filter(F.col("q_nn") > 0)
     )
     c = (
         corpus.filter(F.expr(nonzero))
-        .select(F.col(id_col).alias("neighbor_id"), int8_quantized(vec_col, "c_qv"))
+        .select(F.col("vec_id").alias("neighbor_id"), int8_quantized("c_qv"))
         .withColumn("c_nn", F.expr(self_dot.format(c="c_qv")))
         .filter(F.col("c_nn") > 0)
     )
@@ -1282,8 +1246,6 @@ def two_stage_rerank_topk(
     probes: DataFrame,
     k: int,
     shortlist_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The production ANN serving pattern: a CHEAP first stage (int8
     quantized cosine over 4x-smaller vectors) builds a k*shortlist_factor
@@ -1302,17 +1264,17 @@ def two_stage_rerank_topk(
     Zero-norm rows are excluded by stage 1's guard on both sides.
     """
     short = quantized_topk(
-        corpus, probes, k * shortlist_factor, id_col, vec_col
+        corpus, probes, k * shortlist_factor
     ).select("query_id", "neighbor_id", "qcos")
     p = probes.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        norm(as_double(F.col(vec_col))).alias("qn2"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        norm(as_double(F.col("embedding"))).alias("qn2"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nv"),
-        norm(as_double(F.col(vec_col))).alias("nn2"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("nv"),
+        norm(as_double(F.col("embedding"))).alias("nn2"),
     )
     scored = (
         c.join(F.broadcast(short), "neighbor_id")
@@ -1335,14 +1297,12 @@ def two_stage_rerank_topk(
     )
 
 
+
 def mmr_topk(
     corpus: DataFrame,
     probes: DataFrame,
     k: int,
     shortlist: int = 20,
-    lam_tenths: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified top-k (Carbonell & Goldstein
     1998) — the serving-side diversity re-ranker: from each probe's exact
@@ -1377,17 +1337,17 @@ def mmr_topk(
     work is O(k · shortlist²) on ~400 int64s — constant in corpus size,
     parallel across probes. The self-pair diagonal is kept (sim value
     unused) so every candidate reaches its group even at shortlist = 1."""
-    pen_tenths = 10 - lam_tenths
-    cand = brute_force_topk(corpus, probes, shortlist, id_col, vec_col).select(
+    lam_tenths, pen_tenths = 7, 3  # λ = 0.7 (see Exactness above)
+    cand = brute_force_topk(corpus, probes, shortlist).select(
         "query_id",
         F.col("neighbor_id").alias("cand_id"),
         F.round(F.col("cos") * F.lit(1e6)).cast("bigint").alias("rel_i"),
     )
     cv = (
         corpus.select(
-            F.col(id_col).alias("cand_id"),
-            as_double(F.col(vec_col)).alias("dvec"),
-            norm(as_double(F.col(vec_col))).alias("cn2"),
+            F.col("vec_id").alias("cand_id"),
+            as_double(F.col("embedding")).alias("dvec"),
+            norm(as_double(F.col("embedding"))).alias("cn2"),
         )
         .join(F.broadcast(cand), "cand_id")
         .groupBy("query_id")
@@ -1464,9 +1424,7 @@ def mmr_topk(
     )
 
 
-def hash_sampled_centroids(
-    corpus: DataFrame, n_clusters: int, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def hash_sampled_centroids(corpus: DataFrame, n_clusters: int) -> DataFrame:
     """Deterministic coarse quantizer: the ``n_clusters`` corpus vectors with
     the smallest md5(id) (a uniform hash-sample — dd5's trick, promoted to a
     shared operator). (cl, center) with cl = dense 0-based rank in hash
@@ -1475,9 +1433,9 @@ def hash_sampled_centroids(
     w = Window.orderBy("__h", "src_id")
     return (
         corpus.select(
-            F.col(id_col).alias("src_id"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            as_double(F.col(vec_col)).alias("center"),
+            F.col("vec_id").alias("src_id"),
+            F.md5(F.col("vec_id").cast("string")).alias("__h"),
+            as_double(F.col("embedding")).alias("center"),
         )
         .orderBy("__h", "src_id")
         .limit(n_clusters)
@@ -1490,8 +1448,6 @@ def build_hash_ivf_index(
     corpus: DataFrame,
     index_dir: str,
     n_clusters: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     assignment: str = "auto",
 ) -> None:
     """Persist a DETERMINISTIC IVF index: same layout and query path as
@@ -1519,15 +1475,13 @@ def build_hash_ivf_index(
         raise ValueError(f"assignment must be auto|flat|two_level, got {assignment!r}")
     if assignment == "auto":
         assignment = "two_level" if n_clusters >= 200 else "flat"
-    centers = hash_sampled_centroids(corpus, n_clusters, id_col, vec_col)
+    centers = hash_sampled_centroids(corpus, n_clusters)
     if assignment == "two_level":
         n_super = max(2, math.isqrt(max(n_clusters - 1, 0)) + 1)  # ceil(sqrt k)
         assigned = two_level_assign(
             corpus,
             centers.select(F.col("cl").alias("cid"), "center"),
             n_super,
-            id_col,
-            vec_col,
         ).select(
             F.col("vid").alias("neighbor_id"),
             "vec",
@@ -1537,10 +1491,10 @@ def build_hash_ivf_index(
     else:
         assigned = (
             corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("vec"),
-                as_double(F.col(vec_col)).alias("__vd"),
-                norm(as_double(F.col(vec_col))).alias("__nr"),
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("embedding").alias("vec"),
+                as_double(F.col("embedding")).alias("__vd"),
+                norm(as_double(F.col("embedding"))).alias("__nr"),
             )
             .crossJoin(
                 F.broadcast(
@@ -1586,8 +1540,6 @@ def hash_ivf_topk_indexed(
     probes: DataFrame,
     k: int,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Query the deterministic IVF index through ``_ivf_query``: probes
     shortlist their ``n_probe`` nearest centroids by ROUNDED COSINE (desc,
@@ -1599,4 +1551,4 @@ def hash_ivf_topk_indexed(
     centers = spark.read.parquet(f"{index_dir}/centroids")
     # negation is exact, so ascending on it is desc(cos), asc(cl)
     key = -F.round(cosine(F.col("query_vec"), F.col("center")), 6)
-    return _ivf_query(assigned, centers, probes, k, n_probe, id_col, vec_col, key)
+    return _ivf_query(assigned, centers, probes, k, n_probe, key)

@@ -283,7 +283,7 @@ def p6_purchase_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p7_latest_day_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7 latest-day slice then hourly profile (ref Dash.py:209-211)."""
-    latest = flt.latest_partition(spark.table("events"), F.to_date("ts"), alias="d")
+    latest = flt.latest_partition(spark.table("events"), F.to_date("ts"))
     return (
         latest.groupBy(F.hour("ts").alias("hour_of_day"))
         .agg(sum_exact("value", "total"))
@@ -311,7 +311,7 @@ def p8_sigma_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8 abnormal-traffic flag (ref TrafficAnalysis.py:410-413), aggregated
     per key. Stats row is broadcast back over the scan — two scans, no
     driver round-trip."""
-    flagged = flt.sigma_outlier_flag(spark.table("events"), "value", k=3.0)
+    flagged = flt.sigma_outlier_flag(spark.table("events"), "value")
     return (
         flagged.groupBy("event_type")
         .agg(

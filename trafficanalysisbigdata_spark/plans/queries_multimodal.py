@@ -141,7 +141,7 @@ def mm4_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplication and ragged-tail handling are hash-verified."""
     from ..operators.multimodal import sample_frames
 
-    frames = sample_frames(synthesize_media(spark.table("documents")), frame_bytes=32)
+    frames = sample_frames(synthesize_media(spark.table("documents")))
     return frames.agg(
         F.countDistinct("media_id").alias("n_videos"),
         F.count(F.lit(1)).alias("n_frames"),
@@ -181,7 +181,7 @@ def mm5_resize_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     row preservation, and feature recomputation end to end."""
     from ..operators.multimodal import resize_media
 
-    resized = resize_media(synthesize_media(spark.table("documents")), max_bytes=128)
+    resized = resize_media(synthesize_media(spark.table("documents")))
     return (
         resized.groupBy("modality")
         .agg(
@@ -387,7 +387,7 @@ def mm9_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency is a second skinny partial agg. Whole frames never shuffle."""
     from ..operators.multimodal import sample_frames
 
-    frames = sample_frames(synthesize_media(spark.table("documents")), frame_bytes=32)
+    frames = sample_frames(synthesize_media(spark.table("documents")))
     occ = frames.groupBy(
         F.xxhash64("frame").alias("fp"), "media_id"
     ).agg(F.count(F.lit(1)).alias("occ"))
@@ -465,7 +465,7 @@ def mm10_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import sample_frames
 
-    frames = sample_frames(synthesize_media(spark.table("documents")), frame_bytes=32)
+    frames = sample_frames(synthesize_media(spark.table("documents")))
     # Byte sum of the binary frame, no decode: one hex() per frame, then a
     # JVM-side fold over 2-hex-char chunks. Octet-based on BOTH engines —
     # a char-based sum would desync from the byte-sliced frames the moment

@@ -1188,7 +1188,7 @@ def pipe14_containment_leak_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev = sh.filter(~F.col("is_train")).select("doc_id", "token")
     n_ev = ev.select("doc_id").distinct().agg(F.count(F.lit(1)).alias("n_docs"))
-    evc = df_capped(ev, n_ev, 0.05, 256).withColumnRenamed("doc_id", "e")
+    evc = df_capped(ev, n_ev).withColumnRenamed("doc_id", "e")
     sizes = evc.groupBy("e").agg(F.count(F.lit(1)).alias("n_e"))
     tr = sh.filter(F.col("is_train")).select(F.col("doc_id").alias("t"), "token")
     common = (

@@ -1106,25 +1106,30 @@ def tx17_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: token instances never reach a shuffle (the first-seen
     agg combines map-side); the window's input is ONE narrow row per
     DOCUMENT, partitioned by source (plan-guarded — an unpartitioned
-    window would funnel the corpus through one task). For a source whose
-    doc COUNT alone overwhelms one partition, set
-    ``spark.trafficanalysisbigdata.heaps.pointsPerDecade`` (> 0): the
-    running sums switch to the grouped two-phase prefix-sum
-    (operators/prefixsum.py — the olap9/pipe11 shape, windows partitioned
-    by (source, range-bucket)) and the fit runs on log-decimated boundary
-    points (first rank in each 10^(1/ppd) bucket — the fit needs ~10^2-3
-    curve points, not 10^9). tx17b registers the dial-on form with its own
-    exact oracle; the dial-off default keeps this query's plan unchanged."""
-    ppd = int(
-        spark.conf.get("spark.trafficanalysisbigdata.heaps.pointsPerDecade", "0")
-    )
-    return _heaps_fit(spark, points_per_decade=ppd)
+    window would funnel the corpus through one task), and every boundary
+    point is fitted. For a source whose doc COUNT alone overwhelms one
+    partition, tx17b is the decimated form of the same fit: grouped
+    two-phase prefix sums and log-decimated boundary points, with its own
+    exact oracle. No conf or argument switches this query to that path."""
+    return _heaps_fit(spark, 0)
 
 
 def _heaps_fit(spark: SparkSession, points_per_decade: int) -> DataFrame:
-    """Shared Heaps'-law fit pipeline: tx17 (dial-off window cumsum, or
-    conf-engaged decimation) and tx17b (decimation forced on). See tx17's
-    docstring for semantics and float discipline."""
+    """Shared Heaps'-law fit pipeline: tx17 (``points_per_decade`` 0: one
+    window cumsum over every boundary point) and tx17b (> 0: decimation).
+    See tx17's docstring for semantics and float discipline.
+
+    r15 optimization pass: per_doc has ONE consumer. The per-source
+    grand totals (n_tokens / n_vocab) used to be their own aggregate over
+    per_doc plus a join — a full second evaluation of the tokenize/
+    first-seen pipeline — and the decimated path's range-cut percentile
+    action was a third. Now the totals ride the same window (tx17: two
+    more full-frame sums in the ONE source-partitioned Window node; tx17b:
+    ledger totals broadcast by ``two_phase_prefix_sums``) and survive into
+    the OLS aggregate as constants-per-source, and the cuts action reads a
+    pruned doc_id scan. Totals are running sums of non-negative addends,
+    so max(total column) per source is exactly the former SUM —
+    bit-identical, oracle-checked."""
     from pyspark.sql.window import Window
 
     from ..functions.text import token_count, tokens as _tokens
@@ -1148,32 +1153,6 @@ def _heaps_fit(spark: SparkSession, points_per_decade: int) -> DataFrame:
             F.coalesce("new_tokens", F.lit(0)).alias("new_tokens"),
         )
     )
-    return _heaps_fit_from(
-        per_doc, points_per_decade, cuts_from=docs.select("doc_id")
-    )
-
-
-def _heaps_fit_from(
-    per_doc: DataFrame, points_per_decade: int, cuts_from: DataFrame | None = None
-) -> DataFrame:
-    """Running sums + OLS over an already-built per_doc frame (source,
-    doc_id, n_tokens, new_tokens) — split out so the scale rehearsal can
-    drive the exact stage the decimation dial changes, on a synthetic
-    per_doc shape, without re-tokenizing a corpus.
-
-    r15 optimization pass: per_doc now has ONE consumer. The per-source
-    grand totals (n_tokens / n_vocab) used to be their own aggregate over
-    per_doc plus a join — a full second evaluation of the tokenize/
-    first-seen pipeline — and the decimated path's range-cut percentile
-    action was a third. Now the totals ride the same window (dial off:
-    two more full-frame sums in the ONE source-partitioned Window node;
-    dial on: ledger totals broadcast by ``two_phase_prefix_sums``) and
-    survive into the OLS aggregate as constants-per-source, and the cuts
-    action reads ``cuts_from`` (a pruned doc_id scan). Totals are running
-    sums of non-negative addends, so max(total column) per source is
-    exactly the former SUM — bit-identical, oracle-checked."""
-    from pyspark.sql.window import Window
-
     if points_per_decade <= 0:
         w = Window.partitionBy("source").orderBy("doc_id")
         w_tot = w.rowsBetween(
@@ -1202,7 +1181,7 @@ def _heaps_fit_from(
             values={"nn": "n_tokens", "vv": "new_tokens", "rk": "__one"},
             group=("source",),
             totals={"tn": "n_tokens", "tv": "new_tokens"},
-            cuts_from=cuts_from,
+            cuts_from=docs.select("doc_id"),
         )
         ppd_lit = F.lit(points_per_decade)
         decile = lambda c: F.floor(F.log10(c) * ppd_lit)  # noqa: E731
@@ -1263,7 +1242,7 @@ def _heaps_fit_from(
     )
 
 
-_TX17B_PPD = 20  # decimation dial: fit points per decade of corpus rank
+_TX17B_PPD = 20  # tx17b's decimation: fit points per decade of corpus rank
 
 
 @register(
@@ -1320,8 +1299,8 @@ _TX17B_PPD = 20  # decimation dial: fit points per decade of corpus rank
     tables=("documents",),
 )
 def tx17b_heaps_vocab_decimated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """tx17's Heaps'-law fit with the DECIMATION DIAL FORCED ON (20 fit
-    points per decade of per-source rank) — the scale path for a source
+    """tx17's Heaps'-law fit, DECIMATED (20 fit points per decade of
+    per-source rank) — the scale path for a source
     whose document count alone overwhelms one window task. The running
     (token, vocab, rank) sums ride ONE grouped two-phase prefix-sum
     (operators/prefixsum.two_phase_prefix_sums: windows partitioned by
@@ -1336,8 +1315,9 @@ def tx17b_heaps_vocab_decimated(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection, sums, slope — is value-oracle-checked; at fixture scale
     (~25 docs/source) ranks 11+ decimate, exercising both filter branches.
     Registered separately from tx17 so the driver checks BOTH paths every
-    rotation; the conf dial (tx17 docstring) routes production corpora."""
-    return _heaps_fit(spark, points_per_decade=_TX17B_PPD)
+    rotation; a corpus too large for tx17's one window per source runs
+    this query instead."""
+    return _heaps_fit(spark, _TX17B_PPD)
 
 
 _BM25_TERMS = ("window", "merge", "sort")

@@ -134,30 +134,19 @@ def register(
 def register_sql(
     name: str,
     sql: str,
-    oracle: str | None = None,
     tags: tuple[str, ...] = (),
     tables: tuple[str, ...] = (),
     doc: str = "",
 ) -> None:
-    """Register a query whose Spark side is ``spark.sql(sql)``.
-
-    When ``oracle`` is omitted the same ANSI string is used for DuckDB — the
-    strongest possible guarantee the two sides agree on semantics.
-    """
+    """Register a query whose Spark side is ``spark.sql(sql)``. The same ANSI
+    string is the DuckDB oracle — the strongest possible guarantee the two
+    sides agree on semantics."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.sql(sql)
 
-    if name in REGISTRY:
-        raise ValueError(f"duplicate query name {name!r}")
-    REGISTRY[name] = QuerySpec(
-        name=name,
-        fn=fn,
-        oracle=sql if oracle is None else oracle,
-        tags=tags,
-        doc=doc,
-        tables=tables,
-    )
+    fn.__doc__ = doc
+    register(name, oracle=sql, tags=tags, tables=tables)(fn)
 
 
 def load_all() -> dict[str, QuerySpec]:

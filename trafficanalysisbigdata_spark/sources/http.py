@@ -38,13 +38,17 @@ from collections.abc import Callable
 HttpTransport = Callable[[str], "tuple[int, dict, bytes]"]
 
 
-def urllib_transport(url: str, timeout_s: float = 30.0) -> tuple[int, dict, bytes]:
+# Per-request socket timeout of the real transport.
+HTTP_TIMEOUT_S = 30.0
+
+
+def urllib_transport(url: str) -> tuple[int, dict, bytes]:
     """Real GET via stdlib urllib. Non-2xx raises HTTPError, which we fold
     into the same (status, headers, body) tuple so status handling lives in
     one place (fetch_page_http), not in the transport."""
     req = urllib.request.Request(url, headers={"Accept": "application/json"})
     try:
-        with urllib.request.urlopen(req, timeout=timeout_s) as resp:
+        with urllib.request.urlopen(req, timeout=HTTP_TIMEOUT_S) as resp:
             return resp.status, dict(resp.headers), resp.read()
     except urllib.error.HTTPError as e:  # 4xx/5xx still carry headers/body
         return e.code, dict(e.headers), e.read()

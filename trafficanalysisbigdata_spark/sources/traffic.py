@@ -85,7 +85,7 @@ def normalize_traffic(raw: DataFrame) -> DataFrame:
     df = raw.withColumnsRenamed(RENAME_MAP)
     # F10: lenient numeric coercion — NULL on malformed input, matching
     # pd.to_numeric(errors='coerce')
-    df = df.withColumns({c: to_number(F.col(c), "int") for c in INT_COLUMNS})
+    df = df.withColumns({c: to_number(F.col(c)) for c in INT_COLUMNS})
     # P4: drop rows missing any required analysis column
     df = df.na.drop(subset=list(REQUIRED))
     # F1–F6: date, datetime, day_of_week (0=Mon), is_weekend, ISO week
@@ -101,7 +101,7 @@ def normalize_traffic(raw: DataFrame) -> DataFrame:
         }
     )
     # F7 + P3: WKT POINT → x/y doubles, geometry dropped
-    df = with_point_coords(df, "geometry")
+    df = with_point_coords(df)
     # direction codes: pandas .cat.codes parity — alphabetical, NaN/unseen → −1
     code = F.lit(-1)
     for name, c in DIRECTION_CODES.items():
@@ -149,7 +149,7 @@ def cast_wide(df: DataFrame) -> DataFrame:
     """S6 (ref proto:93-105): typed cast loop — hour columns to int (NULL on
     malformed), date to date."""
     casts: dict[str, Column] = {
-        c: to_number(F.col(c), "int") for c in WIDE_HOUR_COLS if c in df.columns
+        c: to_number(F.col(c)) for c in WIDE_HOUR_COLS if c in df.columns
     }
     if "date" in df.columns:
         # F11: lenient — ANSI to_date raises on malformed strings
@@ -157,12 +157,12 @@ def cast_wide(df: DataFrame) -> DataFrame:
     return df.withColumns(casts)
 
 
-def melt_wide(df: DataFrame, id_cols: list[str] | None = None) -> DataFrame:
+def melt_wide(df: DataFrame) -> DataFrame:
     """F20 + F13 (ref proto:144-149): unpivot the 24 hour columns to long
-    (ids, time_label, traffic_volume) plus the reference's integer hour."""
-    ids = id_cols or ["segmentid"]
+    (segmentid, time_label, traffic_volume) plus the reference's integer
+    hour."""
     long = df.melt(
-        ids=ids,
+        ids=["segmentid"],
         values=[c for c in WIDE_HOUR_COLS if c in df.columns],
         variableColumnName="time_label",
         valueColumnName="traffic_volume",
